@@ -83,25 +83,43 @@ def compact_state(cell_log: DataFrame) -> DataFrame:
     return latest_per_cell(cell_log)
 
 
+def merge_slice(
+    state: DataFrame, increment_cells: DataFrame, touched: DataFrame
+) -> DataFrame:
+    """The part of ``merge_state`` that changes: the state's cells of
+    the increment's row keys, re-compacted together with the increment.
+    It holds every cell of every touched key, so it is the whole new
+    state of those keys. ``touched`` is the increment's distinct
+    ``row_key`` set; a caller that reuses it passes it in pinned, so it
+    is computed once."""
+    affected = state.join(F.broadcast(touched), "row_key", "left_semi")
+    return compact_state(affected.unionByName(increment_cells))
+
+
 def merge_state(state: DataFrame, increment_cells: DataFrame) -> DataFrame:
     """Fold one micro-batch of CDC cells into the compacted cell state —
     the batch equivalent of one reference commit cycle
     (SolrIndexTools.java:51-82), but conflict resolution is by cell
     (ts, seq), not arrival order, so out-of-order delivery is safe.
 
-    Plan: rows untouched by the increment pass through an anti-join
-    against the (small, broadcast) touched-key set — the 100 TB state
-    table is never shuffled; only the touched slice is re-compacted.
+    Plan: ``state ⋉̸ touched ∪ merge_slice``. Rows untouched by the
+    increment pass through an anti-join against the (small, broadcast)
+    touched-key set, so the state table is never shuffled; only the
+    touched slice is re-compacted. What a write of the result costs is
+    up to the storage: a plain parquet directory is rewritten whole.
     """
     touched = increment_cells.select("row_key").distinct()
     untouched = state.join(F.broadcast(touched), "row_key", "left_anti")
-    affected = state.join(F.broadcast(touched), "row_key", "left_semi")
-    merged = compact_state(affected.unionByName(increment_cells))
-    return untouched.unionByName(merged)
+    return untouched.unionByName(merge_slice(state, increment_cells, touched))
 
 
 def documents_from_state(state: DataFrame, qualifiers: list[str]) -> DataFrame:
     """Serving view over the cell state: identical to
     ``documents_from_cells`` (a compacted state is itself a valid cell
-    log — see compact_state)."""
+    log — see compact_state).
+
+    A document depends only on its own key's cells, so applied to a
+    slice that holds all cells of some keys (``merge_slice``) this
+    yields exactly those keys' documents, and none for a key whose row
+    is tombstoned: the delta a commit swaps into the serving view."""
     return documents_from_cells(state, qualifiers)

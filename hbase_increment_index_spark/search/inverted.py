@@ -87,13 +87,11 @@ def merge_postings(
     same plan class as the cell-state merge.
 
     Equivalent by construction to rebuilding from the post-mutation
-    corpus (tested); idempotent for re-delivered batches.
+    corpus (tested); idempotent for re-delivered batches. The dropped
+    ids need no ``distinct``: an anti-join ignores duplicate keys, so
+    the two id sets are broadcast as one union with no shuffle.
     """
-    touched = (
-        changed_docs.select(id_col)
-        .unionByName(deleted_ids.select(id_col))
-        .distinct()
-    )
+    touched = changed_docs.select(id_col).unionByName(deleted_ids.select(id_col))
     kept = postings.join(F.broadcast(touched), id_col, "left_anti")
     fresh = build_inverted_index(changed_docs, id_col, text_col)
     return kept.unionByName(fresh.select(*kept.columns))

@@ -10,12 +10,12 @@ Mapping:
   Semaphore single-writer      → micro-batches are serialized per query
   crash loses buffers          → checkpointLocation (exactly-once)
 
-The merge inside foreachBatch is the same ``merge_state`` the batch
-path uses — one code path for both, which is the point of Structured
-Streaming. The persisted index is the compacted CELL STATE (with
-tombstones), so conflict resolution is by cell (ts, seq) and
-micro-batch boundaries can never change the result; the flat document
-table is the derived serving view.
+The merge inside foreachBatch is the same ``merge_state`` algebra the
+batch path uses (its touched half, ``merge_slice``) — one code path for
+both, which is the point of Structured Streaming. The persisted index
+is the compacted CELL STATE (with tombstones), so conflict resolution
+is by cell (ts, seq) and micro-batch boundaries can never change the
+result; the flat document table is the derived serving view.
 """
 
 from __future__ import annotations
@@ -27,6 +27,7 @@ from pyspark.sql.streaming import StreamingQuery
 from hbase_increment_index_spark.cdc.index_builder import (
     compact_state,
     documents_from_state,
+    merge_slice,
     merge_state,
 )
 
@@ -34,19 +35,6 @@ CELL_LOG_DDL = (
     "op string, row_key string, family string, qualifier string, "
     "value string, ts timestamp, seq long"
 )
-
-
-def _committed_state_exists(spark: SparkSession, path: str) -> bool:
-    """True iff a previous micro-batch COMMITTED state at ``path``.
-
-    Uses Hadoop FileSystem (scheme-agnostic: file://, hdfs://, s3a://)
-    and requires the _SUCCESS marker, so a half-written directory from a
-    crashed overwrite counts as absent while a transient read failure of
-    existing data still surfaces as an error in the caller's read."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jvm.org.apache.hadoop.fs.Path(path, "_SUCCESS")))
 
 
 def read_cell_stream(
@@ -77,28 +65,36 @@ def start_index_maintenance(
 ) -> StreamingQuery:
     """Continuously fold CDC micro-batches into the index.
 
-    Each micro-batch: read current cell state → merge_state (broadcast
-    anti-join on touched keys; only the touched slice re-compacts) →
-    atomic rewrite of the state + re-derive the document serving view.
-    Real deployments would target a MERGE-capable table format
-    (Delta/Iceberg) so the rewrite touches only matching files; plain
-    parquet rewrite keeps this container-dependency-free.
+    Each micro-batch runs ``merge_microbatch``: it reads, shuffles and
+    re-derives only the batch's touched row keys — their state cells
+    (broadcast semi-join, ``merge_slice``), their documents and, when
+    enabled, their postings and facet/rollup contributions. The rest of
+    every table passes through a broadcast anti-join unshuffled. Each
+    table is then written to a staging directory and swapped in by
+    rename. Plain parquet rewrites whole directories, so the bytes
+    written per commit are still O(index); a MERGE-capable table format
+    (Delta/Iceberg), or ``merge_microbatch_cow``'s bucketed layout,
+    would make them O(batch). Plain parquet keeps this
+    container-dependency-free.
 
-    With ``postings_field`` set, the FULL-TEXT index is maintained
-    incrementally too (the reference's actual job — keep Solr in sync
-    with the row store, reference README.md:5-10): per batch, postings
-    for touched row keys are dropped via a broadcast anti-join and the
-    touched keys' fresh postings appended (search.inverted.
-    merge_postings) — work ∝ batch size, never corpus size. Written to
+    With ``postings_field`` set, the FULL-TEXT index is maintained too
+    (the reference's actual job — keep Solr in sync with the row store,
+    reference README.md:5-10): postings of the touched row keys drop
+    through a broadcast anti-join and the delta's fresh postings append
+    (search.inverted.merge_postings). Written to
     ``index_path + "_postings"``.
 
     With ``facet_field`` set, a materialized facet-count view over that
-    document field is maintained incrementally as well (the aggregate
-    analogue — a Solr facet over the live index): the pre-image counts
-    of touched docs are captured BEFORE the rewrite (batch-bounded, so
-    they collect to the driver), the post-image counts after, and the
-    ±delta merges into ``index_path + "_facets"`` via groupBy-sum with
-    zero-count dropout. Work ∝ batch size + facet cardinality.
+    document field is maintained as well (the aggregate analogue — a
+    Solr facet over the live index): the touched docs' pre-image counts
+    are journaled before any swap, the delta's counts are added, and
+    the ±delta merges into ``index_path + "_facets"`` via groupBy-sum
+    with zero-count dropout. ``rollup_key_field``/``rollup_value_field``
+    maintain a (count, Σvalue) view at ``index_path + "_rollup"`` the
+    same way. Its ``sum_value`` is 0, not SQL's null, for a group
+    none of whose docs carries a value: the ±delta fold cannot tell
+    "no values left" from "values summing to 0", so a fresh build
+    agrees with it.
     """
     spark = cell_stream.sparkSession
 
@@ -133,93 +129,90 @@ def merge_microbatch(
 ) -> None:
     """One micro-batch fold — the foreachBatch body of
     ``start_index_maintenance``, module-level so recovery semantics are
-    directly testable: after a crash between the sink writes and the
-    checkpoint commit, Structured Streaming re-invokes this with the
-    SAME batch; because ``merge_state`` re-compacts by cell coordinates
-    + (ts, seq), replaying a batch over already-merged state is a
-    no-op (exactly-once effect from at-least-once delivery +
-    idempotent merge)."""
-    state_path = index_path + "_state"
-    postings_path = index_path + "_postings"
-    facets_path = index_path + "_facets"
-    rollup_path = index_path + "_rollup"
+    directly testable.
 
+    Per batch, only the touched row keys are read, shuffled and
+    re-derived:
+
+    1. the touched-key set is computed once and pinned;
+    2. the touched keys' current state cells are re-compacted with the
+       batch (``merge_slice``) and pinned; ``documents_from_state`` of
+       that slice is the document delta;
+    3. each table becomes ``table ⋉̸ touched ∪ delta`` (broadcast
+       anti-join): the state, the serving view at ``index_path``, and
+       the postings (``merge_postings`` over the delta); the facet and
+       rollup views fold ``+delta − pre-image`` into their counts;
+    4. every table is written to a staging directory and swapped in by
+       two FileSystem renames (live → displaced, staging → live); the
+       state swaps last, so a committed state means a committed index.
+
+    The pass-through half of step 3 is still a full read and rewrite of
+    each plain-parquet table: bytes written stay O(index). It is
+    coalesced, without a shuffle, to the live table's partition count,
+    so a table's part-file count does not grow with the commits.
+
+    Crash recovery: after a crash, Structured Streaming re-invokes this
+    with the SAME batch. Re-merging an already-merged slice is a no-op
+    (``merge_state`` resolves by cell (ts, seq)), so the state, index
+    and postings are idempotent; a live table left without ``_SUCCESS``
+    mid-swap is restored from its displaced copy first. A crash before
+    the state's swap replays as the same merge (or, in batch 0, the
+    same bootstrap) over tables some of which already hold the batch.
+    The facet and rollup ``±delta`` is not idempotent, so their
+    pre-image is journaled (``<view>._pre_<batch_id>``) before any
+    swap, and the displaced view (``<view>._base_<batch_id>``) stays as
+    the base until the commit ends: a replay folds the same delta into
+    the same base. A rollup group whose docs carry no value sums to 0
+    (see ``start_index_maintenance``).
+    """
+    if rollup_key_field is not None and rollup_value_field is None:
+        raise ValueError(
+            "rollup_key_field requires rollup_value_field (the summed column)"
+        )
     if batch.isEmpty():  # commit-only-if-data (SolrIndexTools.java:66-67)
         return
-    import shutil
 
-    touched = batch.select(F.col("row_key").alias("id")).distinct()
-    # facet pre-image: the touched docs' current facet counts, read and
-    # MATERIALIZED before the serving view is overwritten. Written to a
-    # batch-scoped staging parquet (facet-cardinality-sized) so the
-    # pre-image never lands in driver memory — executors write it,
-    # executors read it back for the ±delta merge.
-    # CRASH-REPLAY NOTE: the pre-image staging file doubles as the
-    # replay journal. It is deleted only after the derived view commits,
-    # so if the process dies between the index overwrite and the view
-    # write, the replayed batch REUSES the journaled pre-image instead
-    # of recomputing it from the already-merged index (which would make
-    # plus == minus and silently drop the batch's delta forever).
-    pre_path = fbase_path = None
-    if facet_field is not None and _committed_state_exists(spark, facets_path):
-        pre_path = facets_path + f"._pre_{batch_id}"
-        fbase_path = facets_path + f"._base_{batch_id}"
-        if not _committed_state_exists(spark, pre_path):
-            (
-                spark.read.parquet(index_path)
-                .join(F.broadcast(touched), "id", "left_semi")
-                .groupBy(F.col(facet_field).alias("facet_value"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .write.mode("overwrite")
-                .parquet(pre_path)
-            )
-        if not _committed_state_exists(spark, fbase_path):
-            spark.read.parquet(facets_path).write.mode("overwrite").parquet(fbase_path)
-    # rollup pre-image — same staging + replay-journal discipline
-    rpre_path = rbase_path = None
+    state_path = index_path + "_state"
+    postings_path = index_path + "_postings"
+    tables = [state_path, index_path] + ([postings_path] if postings_field else [])
+    views = []  # (view path, grouped field, key column, summed field)
+    if facet_field is not None:
+        views.append((index_path + "_facets", facet_field, "facet_value", None))
     if rollup_key_field is not None:
-        if rollup_value_field is None:
-            raise ValueError(
-                "rollup_key_field requires rollup_value_field (the summed column)"
-            )
-        if _committed_state_exists(spark, rollup_path):
-            rpre_path = rollup_path + f"._pre_{batch_id}"
-            rbase_path = rollup_path + f"._base_{batch_id}"
-            if not _committed_state_exists(spark, rpre_path):
-                (
-                    spark.read.parquet(index_path)
-                    .join(F.broadcast(touched), "id", "left_semi")
-                    .groupBy(F.col(rollup_key_field).alias("key"))
-                    .agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum(
-                            F.col(rollup_value_field).cast("decimal(30,6)")
-                        ).alias("sum_value"),
-                    )
-                    .write.mode("overwrite")
-                    .parquet(rpre_path)
-                )
-            if not _committed_state_exists(spark, rbase_path):
-                spark.read.parquet(rollup_path).write.mode("overwrite").parquet(rbase_path)
-    # Bootstrap-vs-merge is decided by an EXPLICIT existence probe of
-    # the committed state (the _SUCCESS marker a successful overwrite
-    # leaves behind), never by catching read errors: a transient IO
-    # failure must propagate and fail the micro-batch (checkpoint
-    # retries it) rather than silently resetting accumulated state.
-    if _committed_state_exists(spark, state_path):
-        state = spark.read.parquet(state_path)
-        merged = merge_state(state, batch)
-    else:
-        merged = compact_state(batch)
-    # rewrite via staging dir for atomicity on plain parquet
-    import shutil
+        views.append(
+            (index_path + "_rollup", rollup_key_field, "key", rollup_value_field)
+        )
+    fs = _Dirs(spark, index_path)
+    fs.recover(tables, [v[0] for v in views])
 
-    tmp = state_path + f"._staging_{batch_id}"
-    merged.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").parquet(state_path)
-    shutil.rmtree(tmp.replace("file:", ""), ignore_errors=True)
-    docs = documents_from_state(spark.read.parquet(state_path), qualifiers)
-    docs.write.mode("overwrite").parquet(index_path)
+    writes: list[tuple[DataFrame, str]] = []  # (frame, directory)
+    swaps: list[tuple[str, str, str]] = []  # (live, staging, displaced)
+
+    def stage(frame: DataFrame, live: str, displaced: str | None = None) -> None:
+        staging = f"{live}._staging_{batch_id}"
+        writes.append((frame, staging))
+        swaps.append((live, staging, displaced or f"{live}._old_{batch_id}"))
+
+    # Bootstrap-vs-merge is decided by an EXPLICIT existence probe of
+    # the committed state (its _SUCCESS marker), never by catching read
+    # errors: a transient IO failure must fail the micro-batch
+    # (checkpoint retries it) rather than silently reset the state.
+    merging = fs.committed(state_path)
+    if merging:
+        touched = batch.select("row_key").distinct().localCheckpoint(eager=True)
+        ids = touched.withColumnRenamed("row_key", "id")
+        state = spark.read.parquet(state_path)
+        new_slice = merge_slice(state, batch, touched).localCheckpoint(eager=True)
+    else:
+        new_slice = compact_state(batch).localCheckpoint(eager=True)
+    delta = documents_from_state(new_slice, qualifiers).localCheckpoint(eager=True)
+
+    if merging:
+        index = spark.read.parquet(index_path)
+        new_docs = _replace_rows(index, ids, "id", delta)
+    else:
+        new_docs = delta
+    stage(new_docs, index_path)
 
     if postings_field is not None:
         from hbase_increment_index_spark.search.inverted import (
@@ -227,97 +220,174 @@ def merge_microbatch(
             merge_postings,
         )
 
-        docs = spark.read.parquet(index_path)
-        changed = docs.join(F.broadcast(touched), "id", "left_semi").select(
-            "id", postings_field
+        if merging and fs.committed(postings_path):
+            live = spark.read.parquet(postings_path)
+            postings = _coalesce_like(
+                merge_postings(
+                    live, delta.select("id", postings_field), ids, "id", postings_field
+                ),
+                live,
+            )
+        else:
+            postings = build_inverted_index(new_docs, "id", postings_field)
+        stage(postings, postings_path)
+
+    if merging and views:
+        # the touched docs as they were before this batch, read once:
+        # every view's pre-image journal and fold read the pinned slice
+        old_docs = index.join(F.broadcast(ids), "id", "left_semi").localCheckpoint(
+            eager=True
         )
-        if _committed_state_exists(spark, postings_path):
-            postings = merge_postings(
-                spark.read.parquet(postings_path),
-                changed,
-                touched,
-                "id",
-                postings_field,
+    journals = []
+    for view_path, field, key, summed in views:
+        pre_path = f"{view_path}._pre_{batch_id}"
+        base_path = f"{view_path}._base_{batch_id}"
+        if merging and (fs.committed(view_path) or fs.committed(base_path)):
+            if fs.committed(pre_path):
+                pre = spark.read.parquet(pre_path)
+            else:
+                pre = _aggregate(old_docs, field, key, summed)
+                writes.append((pre, pre_path))
+            base = base_path if fs.committed(base_path) else view_path
+            view = _fold(
+                spark.read.parquet(base),
+                _aggregate(delta, field, key, summed),
+                pre,
+                key,
             )
+            journals.append(pre_path)
         else:
-            postings = build_inverted_index(docs, "id", postings_field)
-        ptmp = postings_path + f"._staging_{batch_id}"
-        postings.write.mode("overwrite").parquet(ptmp)
-        spark.read.parquet(ptmp).write.mode("overwrite").parquet(postings_path)
-        shutil.rmtree(ptmp.replace("file:", ""), ignore_errors=True)
+            view = _aggregate(new_docs, field, key, summed)
+        stage(view, view_path, displaced=base_path)
 
-    if facet_field is not None:
-        new_docs = spark.read.parquet(index_path)
-        if pre_path is None:
-            fcounts = new_docs.groupBy(
-                F.col(facet_field).alias("facet_value")
-            ).agg(F.count(F.lit(1)).alias("n"))
-        else:
-            plus = (
-                new_docs.join(F.broadcast(touched), "id", "left_semi")
-                .groupBy(F.col(facet_field).alias("facet_value"))
-                .agg(F.count(F.lit(1)).alias("n"))
-            )
-            minus = spark.read.parquet(pre_path).select(
-                "facet_value", (-F.col("n")).cast("long").alias("n")
-            )
-            fcounts = (
-                spark.read.parquet(fbase_path)
-                .unionByName(plus)
-                .unionByName(minus)
-                .groupBy("facet_value")
-                .agg(F.sum("n").alias("n"))
-                .filter(F.col("n") > 0)
-            )
-        ftmp = facets_path + f"._staging_{batch_id}"
-        fcounts.write.mode("overwrite").parquet(ftmp)
-        spark.read.parquet(ftmp).write.mode("overwrite").parquet(facets_path)
-        shutil.rmtree(ftmp.replace("file:", ""), ignore_errors=True)
-        if pre_path is not None:
-            shutil.rmtree(pre_path.replace("file:", ""), ignore_errors=True)
-            shutil.rmtree(fbase_path.replace("file:", ""), ignore_errors=True)
+    # the state swaps last: a committed state is the commit marker, so
+    # ``merging`` implies every other table was committed before it
+    if merging:
+        stage(_replace_rows(state, touched, "row_key", new_slice), state_path)
+    else:
+        stage(new_slice, state_path)
 
-    if rollup_key_field is not None:
-        # incremental (count, Σvalue) rollup view — the additive-
-        # aggregate IVM (facets.merge_rollup_sums semantics), exact
-        # decimals end-to-end so view generations never drift
-        new_docs = spark.read.parquet(index_path)
-        val = F.col(rollup_value_field).cast("decimal(30,6)")
-        if rpre_path is None:
-            rview = new_docs.groupBy(F.col(rollup_key_field).alias("key")).agg(
-                F.count(F.lit(1)).alias("n"), F.sum(val).alias("sum_value")
-            )
-        else:
-            plus = (
-                new_docs.join(F.broadcast(touched), "id", "left_semi")
-                .groupBy(F.col(rollup_key_field).alias("key"))
-                .agg(F.count(F.lit(1)).alias("n"), F.sum(val).alias("sum_value"))
-            )
-            minus = spark.read.parquet(rpre_path).select(
-                "key",
-                (-F.col("n")).cast("long").alias("n"),
-                (-F.col("sum_value")).alias("sum_value"),
-            )
-            rview = (
-                spark.read.parquet(rbase_path)
-                .unionByName(plus)
-                .unionByName(minus)
-                .groupBy("key")
-                .agg(
-                    F.sum("n").alias("n"),
-                    F.sum("sum_value").cast("decimal(30,6)").alias("sum_value"),
-                )
-                .filter(F.col("n") > 0)
-            )
-        rtmp = rollup_path + f"._staging_{batch_id}"
-        rview.write.mode("overwrite").parquet(rtmp)
-        spark.read.parquet(rtmp).write.mode("overwrite").parquet(rollup_path)
-        shutil.rmtree(rtmp.replace("file:", ""), ignore_errors=True)
-        if rpre_path is not None:
-            shutil.rmtree(rpre_path.replace("file:", ""), ignore_errors=True)
-            shutil.rmtree(rbase_path.replace("file:", ""), ignore_errors=True)
+    # every write commits before the first swap
+    for frame, path in writes:
+        frame.write.mode("overwrite").parquet(path)
+    for live, staging, displaced in swaps:
+        fs.swap(live, staging, displaced)
+    # journals before displaced views: a base without its pre-image
+    # marks a finished swap (see _Dirs.recover)
+    for path in journals + [displaced for _, _, displaced in swaps]:
+        fs.delete(path)
 
 
+def _replace_rows(
+    table: DataFrame, keys: DataFrame, key: str, rows: DataFrame
+) -> DataFrame:
+    """``table`` with the rows of ``keys`` replaced by ``rows``: the
+    untouched rows pass through a broadcast anti-join and ``rows``
+    append, coalesced to the table's own width."""
+    kept = table.join(F.broadcast(keys), key, "left_anti")
+    return _coalesce_like(kept.unionByName(rows), table)
+
+
+def _coalesce_like(frame: DataFrame, table: DataFrame) -> DataFrame:
+    """``frame`` coalesced, without a shuffle, to the number of scan
+    partitions of ``table`` (one per small file, one per
+    ``maxPartitionBytes`` of a large one), so a rewrite writes as many
+    part files as the table it replaces."""
+    return frame.coalesce(max(1, table.rdd.getNumPartitions()))
+
+
+def _aggregate(
+    docs: DataFrame, field: str, key: str, summed: str | None
+) -> DataFrame:
+    """Per-value (count, [Σ summed]) of ``field`` over ``docs``: the
+    facet view, or with ``summed`` the rollup view (exact decimals). A
+    group whose docs carry no value sums to zero, not null, so that
+    ``_fold`` and a rebuild agree whatever the commit history."""
+    aggs = [F.count(F.lit(1)).alias("n")]
+    if summed is not None:
+        total = F.sum(F.col(summed).cast("decimal(30,6)"))
+        aggs.append(F.coalesce(total, F.lit(0)).alias("sum_value"))
+    return docs.groupBy(F.col(field).alias(key)).agg(*aggs)
+
+
+def _fold(base: DataFrame, plus: DataFrame, minus: DataFrame, key: str) -> DataFrame:
+    """``base + plus − minus`` per key, dropping keys whose count falls
+    to zero: the additive-aggregate IVM step (facets.merge_rollup_sums
+    semantics)."""
+    summed = "sum_value" in base.columns
+    neg = [(-F.col("n")).cast("long").alias("n")]
+    aggs = [F.sum("n").alias("n")]
+    if summed:
+        neg.append((-F.col("sum_value")).alias("sum_value"))
+        aggs.append(F.sum("sum_value").cast("decimal(30,6)").alias("sum_value"))
+    return (
+        base.unionByName(plus)
+        .unionByName(minus.select(key, *neg))
+        .groupBy(key)
+        .agg(*aggs)
+        .filter(F.col("n") > 0)
+    )
+
+
+class _Dirs:
+    """The directory moves of a commit, through the Hadoop FileSystem
+    of the index path, so they work on any scheme (file://, hdfs://,
+    s3a://)."""
+
+    def __init__(self, spark: SparkSession, path: str):
+        self._path = spark._jvm.org.apache.hadoop.fs.Path
+        self._fs = self._path(path).getFileSystem(spark._jsc.hadoopConfiguration())
+
+    def committed(self, path: str) -> bool:
+        return bool(self._fs.exists(self._path(path, "_SUCCESS")))
+
+    def delete(self, path: str) -> None:
+        self._fs.delete(self._path(path), True)
+
+    def rename(self, src: str, dst: str) -> None:
+        if not self._fs.rename(self._path(src), self._path(dst)):
+            raise OSError(f"rename {src} -> {dst} failed")
+
+    def swap(self, live: str, staging: str, displaced: str) -> None:
+        """Move ``live`` aside to ``displaced`` and ``staging`` into its
+        place. A ``displaced`` copy kept from an interrupted attempt
+        already holds the pre-commit table, so ``live`` is dropped."""
+        if self._fs.exists(self._path(displaced)):
+            self.delete(live)
+        elif self._fs.exists(self._path(live)):
+            self.rename(live, displaced)
+        self.rename(staging, live)
+
+    def recover(self, tables: list[str], views: list[str]) -> None:
+        """Undo what an interrupted commit left behind, before a new one
+        starts. Staging directories are dropped. A table without
+        ``_SUCCESS`` next to a displaced ``._old_*`` copy died mid-swap
+        and gets the copy back; other ``._old_*`` copies are leftovers
+        of finished swaps. A view's ``._base_<id>`` without its
+        ``._pre_<id>`` journal is one too; with it, the base is what the
+        replay of batch ``<id>`` folds into."""
+        parent = self._path(tables[0]).getParent()
+        if not self._fs.exists(parent):
+            return
+        names = {st.getPath().getName() for st in self._fs.listStatus(parent)}
+        for live in tables + views:
+            prefix = self._path(live).getName() + "."
+            old = []
+            for name in sorted(n for n in names if n.startswith(prefix)):
+                tag, _, bid = name[len(prefix):].rpartition("_")
+                path = str(self._path(parent, name))
+                if tag == "_staging":
+                    self.delete(path)
+                elif tag == "_old" and live in tables:
+                    old.append(path)
+                elif tag == "_base" and live in views:
+                    if not self.committed(f"{live}._pre_{bid}"):
+                        self.delete(path)
+            if old and not self.committed(live):
+                self.delete(live)
+                self.rename(old.pop(), live)
+            for path in old:
+                self.delete(path)
 
 
 def merge_microbatch_cow(

@@ -137,6 +137,125 @@ def test_merge_state_split_invariance(spark, rows, cut):
     assert got == want
 
 
+_MB_QUALS = ["cat", "price", "text"]
+_MB_VALUES = {
+    "cat": ["x", "y"],
+    "price": ["1.50", "2.25", "10.00"],
+    "text": ["red apple", "green apple pie", "blue sky"],
+    "extra": ["zz"],  # a qualifier outside the index's
+}
+_mb_keys = st.sampled_from(["a", "b", "c", "d"])
+_mb_ts = st.integers(min_value=0, max_value=9)
+
+
+@st.composite
+def cdc_batches(draw):
+    """A sequence of CDC micro-batches with out-of-order cells, row
+    tombstones, a re-put after a delete, a key repeated across batches,
+    a deletes-only batch and cells for a qualifier outside the index's.
+    ``seq`` is the arrival order; ``ts`` is drawn independently of it."""
+
+    def put(key, ts, qual=None):
+        qual = qual or draw(st.sampled_from([*_MB_QUALS, "extra"]))
+        return ("put", key, qual, draw(st.sampled_from(_MB_VALUES[qual])), ts)
+
+    def cell():
+        key, ts = draw(_mb_keys), draw(_mb_ts)
+        return ("delete", key, None, None, ts) if draw(_ops) == "delete" else put(key, ts)
+
+    batches = [
+        [cell() for _ in range(draw(st.integers(1, 5)))]
+        for _ in range(draw(st.integers(1, 2)))
+    ]
+    # a key deleted in one batch and put again, later in event time, in
+    # a later batch; and a stale put that arrives last but is oldest
+    key, t = draw(_mb_keys), draw(st.integers(1, 8))
+    batches[draw(st.integers(0, len(batches) - 1))].append(("delete", key, None, None, t))
+    batches.append([put(key, t + 1), put(draw(_mb_keys), 0), put(draw(_mb_keys), draw(_mb_ts), "extra")])
+    deletes = draw(st.lists(_mb_keys, min_size=1, max_size=3, unique=True))
+    batches.insert(
+        draw(st.integers(0, len(batches))),
+        [("delete", k, None, None, draw(_mb_ts)) for k in deletes],
+    )
+    seq = 0
+    out = []
+    for batch in batches:
+        rows = []
+        for op, key, qual, value, ts in batch:
+            rows.append((op, key, "cf", qual, value, dt.datetime(2024, 1, 1, 0, 0, ts), seq))
+            seq += 1
+        out.append(rows)
+    return out
+
+
+@settings(max_examples=3, deadline=None, suppress_health_check=list(HealthCheck))
+@given(cdc_batches())
+def test_microbatch_views_merge_equals_rebuild(spark, batches):
+    """Folding a batch sequence with merge_microbatch (postings, facets
+    and rollup on) leaves the state, index, postings, facets and rollup
+    equal to a from-scratch build over the union of all the cells — the
+    batch-bounded commit re-derives only the touched slice, and this is
+    what makes that exact."""
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from hbase_increment_index_spark.cdc.index_builder import (
+        compact_state,
+        documents_from_cells,
+    )
+    from hbase_increment_index_spark.search.inverted import build_inverted_index
+    from hbase_increment_index_spark.streaming.cdc_stream import merge_microbatch
+
+    def rows(df, cols):
+        return {tuple(r) for r in df.select(*cols).collect()}
+
+    state_cols = ["op", "row_key", "family", "qualifier", "value", "ts", "seq"]
+    doc_cols = ["id", *_MB_QUALS]
+    with tempfile.TemporaryDirectory() as d:
+        idx = f"{d}/index"
+        for bid, batch in enumerate(batches):
+            merge_microbatch(
+                spark,
+                spark.createDataFrame(batch, SCHEMA),
+                bid,
+                idx,
+                _MB_QUALS,
+                postings_field="text",
+                facet_field="cat",
+                rollup_key_field="cat",
+                rollup_value_field="price",
+            )
+        got = {
+            "state": rows(spark.read.parquet(idx + "_state"), state_cols),
+            "docs": rows(spark.read.parquet(idx), doc_cols),
+            "postings": rows(spark.read.parquet(idx + "_postings"), ["term", "id", "tf"]),
+            "facets": rows(spark.read.parquet(idx + "_facets"), ["facet_value", "n"]),
+            "rollup": rows(spark.read.parquet(idx + "_rollup"), ["key", "n", "sum_value"]),
+        }
+
+    cells = spark.createDataFrame([r for b in batches for r in b], SCHEMA)
+    docs = documents_from_cells(cells, _MB_QUALS)
+    by_cat = docs.groupBy(F.col("cat").alias("key"))
+    want = {
+        "state": rows(compact_state(cells), state_cols),
+        "docs": rows(docs, doc_cols),
+        "postings": rows(build_inverted_index(docs, "id", "text"), ["term", "id", "tf"]),
+        "facets": {(k, n) for k, n, _ in rows(by_cat.count(), ["key", "count", "key"])},
+        # a group whose docs carry no value sums to zero
+        "rollup": rows(
+            by_cat.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(
+                    F.sum(F.col("price").cast("decimal(30,6)")), F.lit(0)
+                ).alias("sum_value"),
+            ),
+            ["key", "n", "sum_value"],
+        ),
+    }
+    assert got == want
+
+
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     st.lists(

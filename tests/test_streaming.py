@@ -237,16 +237,17 @@ def test_committed_state_probe(spark, tmp_path):
     # bootstrap-vs-merge is decided by an explicit probe, not a bare
     # except around the read (ADVICE r1): missing dir and half-written
     # dir (no _SUCCESS) both read as "no committed state"
-    from hbase_increment_index_spark.streaming.cdc_stream import _committed_state_exists
+    from hbase_increment_index_spark.streaming.cdc_stream import _Dirs
 
     p = str(tmp_path / "state")
-    assert _committed_state_exists(spark, p) is False
+    fs = _Dirs(spark, p)
+    assert fs.committed(p) is False
     import os
 
     os.makedirs(p)  # directory exists but no _SUCCESS -> still absent
-    assert _committed_state_exists(spark, p) is False
+    assert fs.committed(p) is False
     spark.range(1).write.mode("overwrite").parquet(p)
-    assert _committed_state_exists(spark, p) is True
+    assert fs.committed(p) is True
 
 
 def test_windowed_event_counts_streaming(spark, sf_dir, tmp_path):
@@ -660,6 +661,274 @@ def test_rollup_replay_after_partial_crash(spark, dirs):
         for r in spark.read.parquet(rollup_path).collect()
     }
     assert got2 == got
+
+
+# ------------------------------------------------- commit swap and recovery
+
+_CRASH_KW = dict(
+    qualifiers=["cat", "price", "text"],
+    postings_field="text",
+    facet_field="cat",
+    rollup_key_field="cat",
+    rollup_value_field="price",
+)
+_CRASH_B1 = [
+    ("put", "A", "cf", "cat", "x", _ts(1), 1),
+    ("put", "A", "cf", "price", "10.00", _ts(1), 2),
+    ("put", "A", "cf", "text", "apple pie", _ts(1), 3),
+    ("put", "B", "cf", "cat", "y", _ts(2), 4),
+    ("put", "B", "cf", "price", "5.00", _ts(2), 5),
+    ("put", "B", "cf", "text", "banana bread", _ts(2), 6),
+    ("put", "C", "cf", "cat", "x", _ts(3), 7),
+    ("put", "C", "cf", "text", "cherry cake", _ts(3), 8),
+]
+_CRASH_B2 = [
+    ("put", "A", "cf", "cat", "y", _ts(4), 9),           # A moves x -> y
+    ("put", "A", "cf", "text", "apple tart", _ts(4), 10),
+    ("delete", "B", "cf", None, None, _ts(5), 11),       # drop B
+    ("put", "D", "cf", "cat", "x", _ts(6), 12),          # new doc
+    ("put", "D", "cf", "price", "1.25", _ts(6), 13),
+    ("put", "C", "cf", "text", "stale", _ts(0), 14),     # older than C's cell
+]
+#: the index's tables, in the order a commit swaps them in
+_SUFFIXES = ("", "_postings", "_facets", "_rollup", "_state")
+
+
+def _index_snapshot(spark, index_path):
+    def rows(suffix, cols):
+        return {tuple(r) for r in spark.read.parquet(index_path + suffix).select(*cols).collect()}
+
+    return {
+        "state": rows("_state", ["op", "row_key", "family", "qualifier", "value", "ts", "seq"]),
+        "docs": rows("", ["id", "cat", "price", "text"]),
+        "postings": rows("_postings", ["term", "id", "tf"]),
+        "facets": rows("_facets", ["facet_value", "n"]),
+        "rollup": rows("_rollup", ["key", "n", "sum_value"]),
+    }
+
+
+@pytest.fixture(scope="module")
+def crash_layouts(spark):
+    """``old``: the index after batch 0; ``new``: after batches 0 and 1
+    run uninterrupted. Each crash point is assembled from the two."""
+    import shutil
+
+    from hbase_increment_index_spark.streaming.cdc_stream import merge_microbatch
+
+    with tempfile.TemporaryDirectory() as d:
+        old, new = f"{d}/old/index", f"{d}/new/index"
+        merge_microbatch(spark, spark.createDataFrame(_CRASH_B1, SCHEMA), 0, old, **_CRASH_KW)
+        for s in _SUFFIXES:
+            shutil.copytree(old + s, new + s)
+        merge_microbatch(spark, spark.createDataFrame(_CRASH_B2, SCHEMA), 1, new, **_CRASH_KW)
+        yield old, new, _index_snapshot(spark, old), _index_snapshot(spark, new)
+
+
+@pytest.mark.parametrize(
+    "crash_point",
+    [
+        "bootstrap_state_without_success",
+        "staged_not_swapped",
+        "view_renamed_to_base",
+        "state_without_success",
+        "all_swapped_journals_kept",
+        "pre_image_deleted_base_kept",
+    ],
+)
+def test_commit_crash_points_replay_to_uninterrupted_result(spark, crash_layouts, tmp_path, crash_point):
+    """A crash at any point of a commit leaves a layout from which
+    replaying the same batch (what Structured Streaming does after a
+    restart) yields exactly the uninterrupted run's state, docs,
+    postings, facets and rollup. Each layout is staged by hand from the
+    index before (``old``) and after (``new``) batch 1; the
+    ``bootstrap_*`` one crashes batch 0, whose "before" is no index.
+    Crashes between two whole swaps are left to
+    ``test_commit_killed_after_each_swap_replays``."""
+    import os
+    import shutil
+
+    from hbase_increment_index_spark.streaming.cdc_stream import merge_microbatch
+
+    old, new, want_old, want_new = crash_layouts
+    idx = str(tmp_path / "index")
+
+    def swap_in(suffix, displaced="._old_1"):
+        os.rename(idx + suffix, idx + suffix + displaced)
+        shutil.copytree(new + suffix, idx + suffix)
+
+    if crash_point.startswith("bootstrap_"):
+        # every table but the state swapped in (there was nothing to
+        # displace), the state's rename torn
+        for s in _SUFFIXES[:-1]:
+            shutil.copytree(old + s, idx + s)
+        shutil.copytree(old + "_state", idx + "_state._staging_0")
+        os.makedirs(idx + "_state/_temporary/0")
+        merge_microbatch(spark, spark.createDataFrame(_CRASH_B1, SCHEMA), 0, idx, **_CRASH_KW)
+        assert _index_snapshot(spark, idx) == want_old
+        assert sorted(os.listdir(tmp_path)) == ["index" + s for s in sorted(_SUFFIXES)]
+        return
+
+    for s in _SUFFIXES:
+        shutil.copytree(old + s, idx + s)
+    # the pre-image journals, written before the first swap
+    touched = spark.createDataFrame(_CRASH_B2, SCHEMA).select(F.col("row_key").alias("id")).distinct()
+    old_docs = spark.read.parquet(idx).join(touched, "id", "left_semi")
+    old_docs.groupBy(F.col("cat").alias("facet_value")).agg(F.count(F.lit(1)).alias("n")).write.parquet(
+        idx + "_facets._pre_1"
+    )
+    old_docs.groupBy(F.col("cat").alias("key")).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.sum(F.col("price").cast("decimal(30,6)")), F.lit(0)).alias("sum_value"),
+    ).write.parquet(idx + "_rollup._pre_1")
+
+    if crash_point == "staged_not_swapped":
+        shutil.copytree(new + "_state", idx + "_state._staging_1")
+        os.remove(idx + "_state._staging_1/_SUCCESS")
+        os.makedirs(idx + "._staging_1/_temporary/0")
+    elif crash_point == "view_renamed_to_base":
+        for s in ("", "_postings"):
+            swap_in(s)
+        os.rename(idx + "_facets", idx + "_facets._base_1")
+    else:
+        for s in ("", "_postings"):
+            swap_in(s)
+        for s in ("_facets", "_rollup"):
+            swap_in(s, displaced="._base_1")
+        if crash_point == "state_without_success":
+            # what an interrupted overwrite or a non-atomic rename
+            # leaves: a live directory with no _SUCCESS marker
+            os.rename(idx + "_state", idx + "_state._old_1")
+            os.makedirs(idx + "_state/_temporary/0")
+        else:
+            swap_in("_state")
+        if crash_point == "pre_image_deleted_base_kept":
+            # clean-up deletes the journals, then the displaced copies
+            # in swap order
+            for s in ("_facets", "_rollup"):
+                shutil.rmtree(idx + s + "._pre_1")
+            for s in ("", "_postings"):
+                shutil.rmtree(idx + s + "._old_1")
+
+    merge_microbatch(spark, spark.createDataFrame(_CRASH_B2, SCHEMA), 1, idx, **_CRASH_KW)
+
+    assert _index_snapshot(spark, idx) == want_new
+    assert want_new["docs"] == {
+        ("A", "y", "10.00", "apple tart"),
+        ("C", "x", None, "cherry cake"),
+        ("D", "x", "1.25", None),
+    }
+    assert sorted(os.listdir(tmp_path)) == ["index" + s for s in sorted(_SUFFIXES)]
+
+
+
+@pytest.mark.parametrize("batch_id", [0, 1])
+def test_commit_killed_after_each_swap_replays(spark, crash_layouts, tmp_path, monkeypatch, batch_id):
+    """Kill the commit of batch ``batch_id`` after each of its table
+    swaps in turn, in the order the commit itself runs them, then
+    replay the batch: the result is the uninterrupted run's. Batch 0
+    is the bootstrap, whose replay must not find a committed state
+    without the tables derived from it."""
+    import os
+    import shutil
+
+    from hbase_increment_index_spark.streaming import cdc_stream
+
+    old, _, want_old, want_new = crash_layouts
+    rows, want = (_CRASH_B1, want_old) if batch_id == 0 else (_CRASH_B2, want_new)
+    real_swap = cdc_stream._Dirs.swap
+    for k in range(1, len(_SUFFIXES)):
+        idx = str(tmp_path / f"after{k}" / "index")
+        if batch_id:
+            for s in _SUFFIXES:
+                shutil.copytree(old + s, idx + s)
+        swapped = []
+
+        def swap(self, live, staging, displaced):
+            if len(swapped) == k:
+                raise RuntimeError("killed mid-commit")
+            swapped.append(live)
+            real_swap(self, live, staging, displaced)
+
+        monkeypatch.setattr(cdc_stream._Dirs, "swap", swap)
+        with pytest.raises(RuntimeError, match="killed mid-commit"):
+            cdc_stream.merge_microbatch(spark, spark.createDataFrame(rows, SCHEMA), batch_id, idx, **_CRASH_KW)
+        monkeypatch.setattr(cdc_stream._Dirs, "swap", real_swap)
+        cdc_stream.merge_microbatch(spark, spark.createDataFrame(rows, SCHEMA), batch_id, idx, **_CRASH_KW)
+        assert _index_snapshot(spark, idx) == want, swapped
+        assert sorted(os.listdir(tmp_path / f"after{k}")) == ["index" + s for s in sorted(_SUFFIXES)]
+
+def _part_files(path):
+    import os
+
+    return sum(1 for n in os.listdir(path) if n.startswith("part-"))
+
+
+def test_commit_part_file_count_is_bounded(spark, tmp_path):
+    """Each commit rewrites the pass-through rows coalesced to the live
+    table's width, so the part files of the index, state and postings
+    do not pile up with the number of commits."""
+    from hbase_increment_index_spark.streaming.cdc_stream import merge_microbatch
+
+    idx = str(tmp_path / "index")
+    tables = [idx, idx + "_state", idx + "_postings"]
+
+    def commit(bid):
+        rows = [
+            ("put", f"k{(bid * 3 + j) % 17}", "cf", "text", f"w{bid} w{j}", _ts(bid % 60), bid * 10 + j)
+            for j in range(3)
+        ] + [("delete", f"k{(bid * 5) % 17}", "cf", None, None, _ts(bid % 60), bid * 10 + 9)]
+        merge_microbatch(
+            spark, spark.createDataFrame(rows, SCHEMA), bid, idx, ["text"], postings_field="text"
+        )
+
+    for bid in range(1, 12):
+        commit(bid)
+        if bid == 1:
+            first = [_part_files(t) for t in tables]
+    after = [_part_files(t) for t in tables]
+    assert all(n >= 1 for n in first)
+    assert all(a <= b for a, b in zip(after, first)), (after, first)
+
+
+#: Spark jobs one commit with postings and facets runs under the test
+#: session (AQE off): the batch probe, the touched-key, slice, delta and
+#: old-docs pins, schema reads and the staging writes. The
+#: commit that re-derived the whole index ran 28.
+COMMIT_JOB_CEILING = 19
+
+
+def test_commit_plan_guard(spark, tmp_path):
+    """The commit's Spark job count must not creep back up: count the
+    jobs of one merge_microbatch (postings and facets on) on a tiny
+    index through its job group."""
+    from hbase_increment_index_spark.streaming.cdc_stream import merge_microbatch
+
+    idx = str(tmp_path / "index")
+    kw = dict(qualifiers=["cat", "text"], postings_field="text", facet_field="cat")
+    b1 = [
+        ("put", "A", "cf", "cat", "x", _ts(1), 1),
+        ("put", "A", "cf", "text", "apple pie", _ts(1), 2),
+        ("put", "B", "cf", "cat", "y", _ts(2), 3),
+        ("put", "B", "cf", "text", "banana", _ts(2), 4),
+    ]
+    b2 = [
+        ("put", "A", "cf", "text", "apple tart", _ts(3), 5),
+        ("delete", "B", "cf", None, None, _ts(4), 6),
+        ("put", "C", "cf", "cat", "x", _ts(5), 7),
+    ]
+    merge_microbatch(spark, spark.createDataFrame(b1, SCHEMA), 0, idx, **kw)
+    batch = spark.createDataFrame(b2, SCHEMA)
+    sc = spark.sparkContext
+    group = f"commit-plan-guard-{id(tmp_path)}"
+    sc.setJobGroup(group, "merge_microbatch plan guard")
+    try:
+        merge_microbatch(spark, batch, 1, idx, **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= COMMIT_JOB_CEILING, n_jobs
+    assert {r["id"] for r in spark.read.parquet(idx).collect()} == {"A", "C"}
 
 
 def test_cow_microbatch_matches_batch_and_is_cow(spark, dirs):
